@@ -49,27 +49,29 @@ def _fmt(col):
 
 
 @_contextmanager
-def _no_data_batches_off(spark: SparkSession):
-    """Skip the trailing no-data micro-batch for bounded runs whose output
-    does not depend on watermark-close emission (r7).
-
-    availableNow always appends one empty batch after the data is drained
-    so watermark-driven output (append-mode windows, outer-join
-    null-extension, timeout flushes) can complete — at the cost of a full
-    state reload + commit for every store.  UPDATE-mode changelogs and
-    eager INNER stream-stream joins emit every row in the data batches;
-    their no-data batch only evicts state that a bounded run is about to
-    discard anyway.  Entries in that class wrap their query start with
-    this guard (oracle-verified identical output); EMIT FINAL, negation
-    legs (outer joins) and the NFA timeout-flush entries keep the
-    default — their results ARE the watermark-close emissions."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
+def _session_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set session confs for the duration of one run, then restore them."""
+    old = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+# Skip the trailing no-data micro-batch (r7).  availableNow always appends
+# one empty batch after the data is drained so watermark-driven output
+# (append-mode windows, outer-join null-extension, timeout flushes) can
+# complete — at the cost of a full state reload + commit for every store.
+# UPDATE-mode changelogs and eager INNER stream-stream joins emit every row
+# in the data batches; their no-data batch only evicts state that a bounded
+# run is about to discard anyway.  Entries in that class pass
+# ``skip_no_data=True`` to their runner (oracle-verified identical output);
+# EMIT FINAL, negation legs (outer joins) and the NFA timeout-flush entries
+# keep the default — their results ARE the watermark-close emissions.
+_NO_DATA_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -109,6 +111,9 @@ def _cleanup_scratch() -> None:
 atexit.register(_cleanup_scratch)
 
 
+_SENTINEL_COLUMNS = {"event_id", "ts", "user_id", "event_type", "value", "props"}
+
+
 def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: list[str]):
     """Stage the events stream plus far-future watermark sentinels WITHOUT a
     Spark job (r7: this setup cost two jobs per CEP entry — a max(ts) agg
@@ -118,15 +123,20 @@ def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: 
     sentinel row per leg type with pyarrow under the source's own schema.
     The streaming file source unions all files of the directory, so the
     row set the query reads is IDENTICAL to the old union+rewrite.
-    Returns the readStream frame with ts normalized to TIMESTAMP.
+    Returns the readStream frame with ts normalized to TIMESTAMP and a
+    30-minute watermark on it.
 
     Sentinels are the i-th type at (event_id, user_id) = -(i+1) with
-    value 0.0, props '{}' — the exact rows the entries inlined before."""
+    value 0.0, props '{}' — the exact rows the entries inlined before.  An
+    events schema with another column set raises :class:`AnalysisError`
+    naming the missing and extra columns."""
     import datetime
     import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from ksql_spark.errors import AnalysisError
 
     src_path = os.path.join(sf_dir, "events.parquet")
     ev_dir = os.path.join(work, "ev")
@@ -140,6 +150,15 @@ def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: 
         if os.path.isdir(src_path)
         else [src_path]
     )
+    schema = pq.read_schema(files[0])
+    missing = sorted(_SENTINEL_COLUMNS - set(schema.names))
+    extra = sorted(set(schema.names) - _SENTINEL_COLUMNS)
+    if missing or extra:
+        raise AnalysisError(
+            f"cannot stage sentinel rows for {src_path}: the events schema "
+            f"is missing columns {missing} and has unexpected columns {extra} "
+            f"(sentinels are built for {sorted(_SENTINEL_COLUMNS)})"
+        )
     for i, f in enumerate(files):
         dst = os.path.join(ev_dir, f"src-{i}.parquet")
         try:
@@ -171,7 +190,6 @@ def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: 
         max_ts = spark.read.parquet(src_path).agg(Fn.max("ts")).first()[0]
     far = max_ts + datetime.timedelta(days=365)
 
-    schema = pq.read_schema(files[0])
     values = {
         "event_id": [-(i + 1) for i in range(len(types))],
         "ts": [far] * len(types),
@@ -189,7 +207,109 @@ def _stage_events_sentinels(spark: SparkSession, sf_dir: str, work: str, types: 
     src = spark.readStream.schema(spark_schema).parquet(ev_dir)
     if dict(src.dtypes).get("ts") == "timestamp_ntz":
         src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
+    return src.withWatermark("ts", "30 minutes")
+
+
+def _events_stream(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
+    """The events table as a catalog STREAM read, ts normalized to TIMESTAMP."""
+    from ksql_spark import STREAM, Catalog
+
+    cat = Catalog(spark, root=os.path.join(work, "catalog"))
+    cat.register_parquet(
+        "events",
+        os.path.join(sf_dir, "events.parquet"),
+        ref=STREAM,
+        event_time_col="ts",
+        event_order_cols=["ts", "event_id"],
+    )
+    src = cat.read_stream("events")
+    if dict(src.dtypes).get("ts") == "timestamp_ntz":
+        src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
     return src
+
+
+def _run_persistent(
+    spark: SparkSession,
+    sf_dir: str,
+    query,
+    *,
+    grace: str = "365 days",
+    skip_no_data: bool = False,
+    streams: tuple[str, ...] = ("events",),
+    tables: tuple[str, ...] = (),
+) -> DataFrame:
+    """Run one statement through a fresh Catalog + PersistentQueryManager.
+
+    Each name in ``streams`` is registered as a STREAM over the events
+    table (event time ``ts``, 8 declared partitions — the state-op
+    parallelism the manager applies); each name in ``tables`` as a
+    broadcast TABLE over the table of that name.  ``query`` is either a
+    CSAS builder, drained to completion with availableNow — the result is
+    the QUERYABLE_ state of an EMIT CHANGES table, else the committed sink
+    rows — or a callable ``run(manager) -> DataFrame`` for the client APIs.
+    ``skip_no_data`` drops the trailing no-data batch (``_NO_DATA_OFF``)."""
+    from ksql_spark import STREAM, TABLE, Catalog
+    from ksql_spark.builder import EmitMode
+    from ksql_spark.sources.catalog import QUERYABLE_PREFIX
+    from ksql_spark.streaming.engine import PersistentQueryManager
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    work = _scratch_dir("ksql_driver_")
+    cat = Catalog(spark, root=os.path.join(work, "catalog"))
+    for name in streams:
+        cat.register_parquet(
+            name,
+            os.path.join(sf_dir, "events.parquet"),
+            ref=STREAM,
+            event_time_col="ts",
+            event_order_cols=["ts", "event_id"],
+            partitions=8,
+        )
+    for name in tables:
+        cat.register_parquet(
+            name, os.path.join(sf_dir, f"{name}.parquet"), ref=TABLE, broadcast=True
+        )
+    mgr = PersistentQueryManager(
+        spark, cat, workdir=os.path.join(work, "engine"), grace=grace, enable_metrics=False
+    )
+    if callable(query):
+        return query(mgr)
+    with _session_conf(spark, _NO_DATA_OFF if skip_no_data else {}):
+        mgr.create_as_select(query, available_now=True, await_termination=True)
+    if query.ref == TABLE and query.select.emit == EmitMode.CHANGES:
+        return cat.read(QUERYABLE_PREFIX + query.name)
+    return mgr.queries[query.name].sink.read_data(spark)
+
+
+def _drain(
+    spark: SparkSession, plan, output_mode: str = "append", *, skip_no_data: bool = False
+) -> DataFrame:
+    """Drain a self-built streaming plan into an exactly-once sink.
+
+    ``plan(work)`` builds the query, staging any inputs under the run's
+    scratch dir ``work``.  The drain runs availableNow at a declared 8
+    shuffle partitions, like the engine's PARTITIONS metadata: every
+    stateful operator opens one state store per shuffle partition per
+    batch, 8 fits these keyspaces, and the session default (32) would
+    multiply the per-batch store open/commit cost for no speedup.  Returns
+    the committed rows; ``skip_no_data`` as in :func:`_run_persistent`."""
+    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    work = _scratch_dir("ksql_driver_")
+    df = plan(work)
+    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "out"), lineage=False)
+    conf = {"spark.sql.shuffle.partitions": "8", **(_NO_DATA_OFF if skip_no_data else {})}
+    with _session_conf(spark, conf):
+        (
+            df.writeStream.foreachBatch(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return sink.read_data(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -771,35 +891,8 @@ def streaming_tumbling_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type through the exactly-once changelog sink; returns the
     materialized QUERYABLE state.  Oracle is plain batch SQL — proving
     streaming == batch row-for-row."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        STREAM,
-        Schema,
-        Select,
-        Sum,
-        TimeUnit,
-        TumblingWindow,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, Count, Create, F, STREAM, Schema, Select, Sum, TimeUnit, TumblingWindow
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days", enable_metrics=False
-    )
     csas = Create(TABLE, "hourly_stats").AsSelect(
         Select(
             F("event_type"),
@@ -811,10 +904,7 @@ def streaming_tumbling_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("event_type"))
         .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_hourly_stats")
-    return state.select(
+    return _run_persistent(spark, sf_dir, csas, skip_no_data=True).select(
         _fmt("window_start").alias("window_start"),
         "event_type",
         "cnt",
@@ -827,36 +917,8 @@ def streaming_emit_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once, when the watermark closes it (reference semantics:
     ksql/select_builder.go:164-169,649-651).  Oracle = batch recomputation
     restricted to watermark-closed windows (window_end <= max(ts) - grace)."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        STREAM,
-        Schema,
-        Select,
-        Sum,
-        TimeUnit,
-        TumblingWindow,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, Count, Create, F, STREAM, Schema, Select, Sum, TimeUnit, TumblingWindow
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_final_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="30 minutes",
-        enable_metrics=False,
-    )
     csas = Create(TABLE, "hourly_finals").AsSelect(
         Select(
             F("event_type"),
@@ -868,9 +930,7 @@ def streaming_emit_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("event_type"))
         .EmitFinal()
     )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    out = mgr.queries["hourly_finals"].sink.read_data(spark)
-    return out.select(
+    return _run_persistent(spark, sf_dir, csas, grace="30 minutes").select(
         _fmt("window_start").alias("window_start"),
         "event_type",
         "cnt",
@@ -881,35 +941,8 @@ def streaming_emit_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_hopping_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping (sliding) window CSAS through the changelog — the streaming
     twin of window_hopping; oracle = the batch sliding-window recompute."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        HoppingWindow,
-        STREAM,
-        Schema,
-        Select,
-        TimeUnit,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, Count, Create, F, HoppingWindow, STREAM, Schema, Select, TimeUnit
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_hop_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     csas = Create(TABLE, "hop_stats").AsSelect(
         Select(F("event_type"), Count(F("event_id")).Alias("cnt"))
         .From(Schema("events", STREAM))
@@ -917,9 +950,7 @@ def streaming_hopping_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("event_type"))
         .EmitChanges()
     )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_hop_stats")
-    return state.select(
+    return _run_persistent(spark, sf_dir, csas).select(
         _fmt("window_start").alias("window_start"), "event_type", "cnt"
     )
 
@@ -929,35 +960,8 @@ def streaming_session_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful operator (Spark's built-in session_window rejects update mode).
     Upserts + merge tombstones materialize to exactly the batch gap-session
     result; oracle = the DuckDB lag/gap-session recomputation."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        STREAM,
-        Schema,
-        Select,
-        SessionWindow,
-        TimeUnit,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, Count, Create, F, STREAM, Schema, Select, SessionWindow, TimeUnit
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_sess_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     csas = Create(TABLE, "session_stats").AsSelect(
         Select(F("user_id"), Count(F("event_id")).Alias("cnt"))
         .From(Schema("events", STREAM))
@@ -965,10 +969,7 @@ def streaming_session_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_session_stats")
-    return state.select(
+    return _run_persistent(spark, sf_dir, csas, skip_no_data=True).select(
         Fn.unix_micros(Fn.col("window_start").cast("timestamp")).alias("session_start_us"),
         Fn.unix_micros(Fn.col("window_end").cast("timestamp")).alias("session_end_us"),
         "user_id",
@@ -981,24 +982,8 @@ def streaming_topk_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/bounded.py): per-group state is the running top-k (O(k), not
     O(history) — the native collect_list fold is the unbounded anti-pattern
     this replaces).  Oracle = the batch top-k recompute."""
-    from ksql_spark import TABLE, Catalog, Create, F, RawColumn, STREAM, Schema, Select, TopK
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, Create, F, RawColumn, STREAM, Schema, Select, TopK
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_topk_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     csas = Create(TABLE, "user_topk").AsSelect(
         Select(
             F("user_id"),
@@ -1008,9 +993,7 @@ def streaming_topk_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_topk")
+    state = _run_persistent(spark, sf_dir, csas, skip_no_data=True)
     return state.select("user_id", Fn.posexplode("top_vals").alias("rank", "top_val")).select(
         "user_id", Fn.col("rank").cast("bigint").alias("rank"), "top_val"
     )
@@ -1021,32 +1004,15 @@ def streaming_histogram_changelog(spark: SparkSession, sf_dir: str) -> DataFrame
     operator — exact while per-group distinct values fit the sketch capacity
     (they do here: 3 event types), state O(capacity) regardless of group
     size.  Oracle = the batch most-frequent recompute."""
-    from ksql_spark import TABLE, Catalog, Create, F, Histogram, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, Create, F, Histogram, STREAM, Schema, Select
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_hist_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     csas = Create(TABLE, "user_hist").AsSelect(
         Select(F("user_id"), Histogram(F("event_type"), 3).Alias("hist"))
         .From(Schema("events", STREAM))
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_hist")
+    state = _run_persistent(spark, sf_dir, csas)
     return state.select("user_id", Fn.explode("hist").alias("event_type", "cnt"))
 
 
@@ -1055,32 +1021,15 @@ def streaming_collect_set_changelog(spark: SparkSession, sf_dir: str) -> DataFra
     per-group state capped at the ksqlDB collect limit (first-N distinct),
     exact when groups stay under it (they do here).  Oracle = the batch
     distinct-set recompute, arrays canonicalized to (pos, value) rows."""
-    from ksql_spark import TABLE, Catalog, CollectSet, Create, F, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, CollectSet, Create, F, STREAM, Schema, Select
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cset_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     csas = Create(TABLE, "user_types").AsSelect(
         Select(F("user_id"), CollectSet(F("event_type")).Alias("types"))
         .From(Schema("events", STREAM))
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_types")
+    state = _run_persistent(spark, sf_dir, csas)
     return state.select("user_id", Fn.posexplode("types").alias("pos", "event_type")).select(
         "user_id", Fn.col("pos").cast("bigint").alias("pos"), "event_type"
     )
@@ -1091,25 +1040,8 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY.md §2.3): same-user event pairs within ±300 s, each emitted
     exactly once through the append changelog.  Oracle = the equivalent
     DuckDB time-range join."""
-    from ksql_spark import Catalog, Create, F, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import Create, F, STREAM, Schema, Select
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_ssj_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    for name in ("events_l", "events_r"):
-        cat.register_parquet(
-            name,
-            os.path.join(sf_dir, "events.parquet"),
-            ref=STREAM,
-            event_time_col="ts",
-            event_order_cols=["ts", "event_id"],
-            partitions=8,
-        )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     csas = Create(STREAM, "user_event_pairs").AsSelect(
         Select(
             F("l.event_id").Alias("id_l"),
@@ -1125,36 +1057,17 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .Where(F("l.event_id").Less(F("r.event_id")))
         .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    return mgr.queries["user_event_pairs"].sink.read_data(spark)
+    return _run_persistent(
+        spark, sf_dir, csas, skip_no_data=True, streams=("events_l", "events_r")
+    )
 
 
 def streaming_stream_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-table join (ksqlDB's bread-and-butter enrichment): events
     stream broadcast-joined to the customer dimension, through a CSAS
     append changelog.  Oracle = the equivalent batch join."""
-    from ksql_spark import Catalog, Create, F, STREAM, Schema, Select, TABLE
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import Create, F, STREAM, Schema, Select, TABLE
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_stj_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    cat.register_parquet(
-        "customer", os.path.join(sf_dir, "customer.parquet"), ref=TABLE, broadcast=True
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     csas = Create(STREAM, "enriched").AsSelect(
         Select(
             F("e.event_id").Alias("event_id"),
@@ -1165,8 +1078,7 @@ def streaming_stream_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .Join(Schema("customer", TABLE).As("c"), F("e.user_id").Equal(F("c.c_custkey")))
         .EmitChanges()
     )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    return mgr.queries["enriched"].sink.read_data(spark)
+    return _run_persistent(spark, sf_dir, csas, tables=("customer",))
 
 
 def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1543,36 +1455,17 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream simulation via explode), dropDuplicatesWithinWatermark keeps
     one copy per event_id with state bounded by the watermark horizon.
     Oracle = the events table itself (each row exactly once)."""
-    from ksql_spark import Catalog, STREAM
     from ksql_spark.operators.dedup import exact_dedup_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_ddw_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-    )
-    src = cat.read_stream("events")
-    if dict(src.dtypes).get("ts") == "timestamp_ntz":
-        src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
-    doubled = src.withColumn("__c", Fn.explode(Fn.array(Fn.lit(1), Fn.lit(2)))).drop("__c")
-    deduped = exact_dedup_stream(doubled, keys=["event_id"], ts_col="ts", grace="365 days")
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "ddw"), lineage=False)
-    q = (
-        deduped.select("event_id", "user_id", "event_type", Fn.round("value", 4).alias("value"))
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink.read_data(spark)
+    def plan(work):
+        src = _events_stream(spark, sf_dir, work)
+        doubled = src.withColumn("__c", Fn.explode(Fn.array(Fn.lit(1), Fn.lit(2)))).drop("__c")
+        deduped = exact_dedup_stream(doubled, keys=["event_id"], ts_col="ts", grace="365 days")
+        return deduped.select(
+            "event_id", "user_id", "event_type", Fn.round("value", 4).alias("value")
+        )
+
+    return _drain(spark, plan)
 
 
 def q_cep_match_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1601,49 +1494,19 @@ def streaming_cep_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowered to a watermarked stream-stream self-join in append mode through
     the exactly-once sink — each match emitted exactly once; join state
     evicted by the time bound.  Oracle = the batch join recompute."""
-    from ksql_spark import Catalog, STREAM
     from ksql_spark.operators.cep import match_sequence
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cep_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-    )
-    src = cat.read_stream("events")
-    if dict(src.dtypes).get("ts") == "timestamp_ntz":
-        src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
-    src = src.withWatermark("ts", "365 days")
-    m = match_sequence(
-        src,
-        [
-            ("click", Fn.col("event_type") == "click"),
-            ("purchase", Fn.col("event_type") == "purchase"),
-        ],
-        within_seconds=14400,
-    ).select("user_id", Fn.col("click_id"), Fn.col("purchase_id"))
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cep"), lineage=False)
-    # declared query parallelism (see streaming_cep_negation)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        with _no_data_batches_off(spark):
-            q = (
-                m.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark)
+    def plan(work):
+        return match_sequence(
+            _events_stream(spark, sf_dir, work).withWatermark("ts", "365 days"),
+            [
+                ("click", Fn.col("event_type") == "click"),
+                ("purchase", Fn.col("event_type") == "purchase"),
+            ],
+            within_seconds=14400,
+        ).select("user_id", Fn.col("click_id"), Fn.col("purchase_id"))
+
+    return _drain(spark, plan, skip_no_data=True)
 
 
 def q_cep_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1678,42 +1541,20 @@ def streaming_cep_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     advancing row.  Each surviving match is emitted exactly once through the
     idempotent sink; all join state is evictable once the watermark passes
     click_ts + 4h.  Oracle = the identical batch recompute."""
-
     from ksql_spark.operators.cep import match_sequence
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepneg_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["click", "purchase", "view"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_sequence(
-        src,
-        [
-            ("click", Fn.col("event_type") == "click"),
-            ("purchase", Fn.col("event_type") == "purchase"),
-        ],
-        within_seconds=14400,
-        absent=[("blocker", Fn.col("event_type") == "view")],
-    ).select("user_id", Fn.col("click_id"), Fn.col("purchase_id"))
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepneg"), lineage=False)
-    # declared query parallelism, like the engine's PARTITIONS metadata: 3
-    # chained stateful joins instantiate a state store per shuffle partition
-    # per op — 8 fits this keyspace; the session default (32) would triple
-    # the per-batch store open/commit overhead for no speedup
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark)
+    def plan(work):
+        return match_sequence(
+            _stage_events_sentinels(spark, sf_dir, work, ["click", "purchase", "view"]),
+            [
+                ("click", Fn.col("event_type") == "click"),
+                ("purchase", Fn.col("event_type") == "purchase"),
+            ],
+            within_seconds=14400,
+            absent=[("blocker", Fn.col("event_type") == "view")],
+        ).select("user_id", Fn.col("click_id"), Fn.col("purchase_id"))
+
+    return _drain(spark, plan)
 
 
 def q_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1773,37 +1614,17 @@ def streaming_cep_quantifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_cep_nfa.py).  Sentinel far-future rows advance the watermark
     past every anchor's close, standing in for the stream continuing.
     Oracle = the identical batch recompute."""
-
     from ksql_spark.operators.cep_nfa import match_quantified_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepq_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_quantified_stream(
-        src,
-        ("a", Fn.col("event_type") == "view", 2, 3),
-        ("b", Fn.col("event_type") == "purchase"),
-        within_seconds=86400,
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepq"), lineage=False)
-    # one stateful op over a small keyspace: declared parallelism 8 (the
-    # session's 32 would quadruple per-batch store open/commit overhead)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
+    def plan(work):
+        return match_quantified_stream(
+            _stage_events_sentinels(spark, sf_dir, work, ["view", "purchase"]),
+            ("a", Fn.col("event_type") == "view", 2, 3),
+            ("b", Fn.col("event_type") == "purchase"),
+            within_seconds=86400,
+        ).filter(Fn.col("user_id") >= 0)
+
+    return _drain(spark, plan, "update").select(
         "user_id", "a_first_id", "a_last_id", "a_count", "b_id"
     )
 
@@ -1816,39 +1637,35 @@ def streaming_cep_repeat4(spark: SparkSession, sf_dir: str) -> DataFrame:
     NFA twin (streaming_cep_quantifier); the NFA is the scale path, this is
     the fixed-n relaxed-contiguity (all ordered 4-subsets) semantics
     ``repeat`` documents.  Oracle = the 5-way ordered self-join."""
-
     from ksql_spark.operators.cep import match_sequence, repeat
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepr4_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_sequence(
-        src,
-        [*repeat("a", Fn.col("event_type") == "view", 4),
-         ("b", Fn.col("event_type") == "purchase")],
-        within_seconds=172800,
-    ).select("user_id", "a1_id", "a2_id", "a3_id", "a4_id", "b_id")
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepr4"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        with _no_data_batches_off(spark):
-            q = (
-                m.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark)
+    def plan(work):
+        return match_sequence(
+            _stage_events_sentinels(spark, sf_dir, work, ["view", "purchase"]),
+            [*repeat("a", Fn.col("event_type") == "view", 4),
+             ("b", Fn.col("event_type") == "purchase")],
+            within_seconds=172800,
+        ).select("user_id", "a1_id", "a2_id", "a3_id", "a4_id", "b_id")
+
+    return _drain(spark, plan, skip_no_data=True)
 
 
-_PATTERN_LEGS = None  # built lazily (needs Fn at import of entry fns)
+_PATTERN_COLS = ("user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id")
+
+
+def _nfa_drain(spark: SparkSession, sf_dir: str, legs, mode: str, cols) -> DataFrame:
+    """Drain one 24h NFA pattern over the sentinel-staged events stream
+    (one view/click/purchase sentinel each, on negative keys the filter
+    drops) in update mode; returns ``cols`` of the committed matches."""
+    from ksql_spark.operators.cep_nfa import match_pattern_stream
+
+    def plan(work):
+        src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
+        return match_pattern_stream(src, legs, within_seconds=86400, mode=mode).filter(
+            Fn.col("user_id") >= 0
+        )
+
+    return _drain(spark, plan, "update").select(*cols)
 
 
 def _pattern_legs():
@@ -1871,7 +1688,7 @@ def q_cep_pattern_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _load(spark, sf_dir, "events")
     return match_pattern(src["events"], _pattern_legs(), within_seconds=86400).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
+        *_PATTERN_COLS
     )
 
 
@@ -1881,34 +1698,7 @@ def streaming_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     the active 24h horizon + a flush cursor), versus one state store per
     step for the chained-join lowering.  Exactly-once flush at anchor
     close; sentinels advance the watermark.  Oracle = the batch twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_ceppat_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(src, _pattern_legs(), within_seconds=86400).filter(
-        Fn.col("user_id") >= 0
-    )
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "ceppat"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
-    )
+    return _nfa_drain(spark, sf_dir, _pattern_legs(), "all", _PATTERN_COLS)
 
 
 def _pattern_negation_legs():
@@ -1946,33 +1736,9 @@ def streaming_cep_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFram
     guarded gap by the kernel at anchor-close flush.  Exactly-once via the
     flush cursor; sentinels advance the watermark.  Oracle = the batch
     NOT-EXISTS twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepneg_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(
-        src, _pattern_negation_legs(), within_seconds=86400
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepneg"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "p_id"
+    return _nfa_drain(
+        spark, sf_dir, _pattern_negation_legs(), "all",
+        ("user_id", "v_first_id", "v_last_id", "v_count", "p_id"),
     )
 
 
@@ -2011,7 +1777,7 @@ def q_cep_pattern_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _load(spark, sf_dir, "events")
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400, mode="first"
-    ).select("user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id")
+    ).select(*_PATTERN_COLS)
 
 
 def streaming_cep_pattern_first(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2023,34 +1789,7 @@ def streaming_cep_pattern_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     and re-emits nothing for the rest of the stream.  Matches emit at
     anchor close (determinism under late data), exactly-once via the flush
     cursor.  Oracle = the batch row_number twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepfirst_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(
-        src, _pattern_legs(), within_seconds=86400, mode="first"
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepfirst"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
-    )
+    return _nfa_drain(spark, sf_dir, _pattern_legs(), "first", _PATTERN_COLS)
 
 
 def q_cep_pattern_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2070,7 +1809,7 @@ def q_cep_pattern_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400,
         mode="skip_past_last",
-    ).select("user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id")
+    ).select(*_PATTERN_COLS)
 
 
 def streaming_cep_pattern_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2083,34 +1822,7 @@ def streaming_cep_pattern_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest.  Selections happen at anchor close in canonical order,
     exactly-once via the persisted (cursor, frontier) pair.  Oracle = the
     batch recursive-greedy twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepskip_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(
-        src, _pattern_legs(), within_seconds=86400, mode="skip_past_last"
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "cepskip"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
-    )
+    return _nfa_drain(spark, sf_dir, _pattern_legs(), "skip_past_last", _PATTERN_COLS)
 
 
 def q_cep_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2130,7 +1842,7 @@ def q_cep_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     return match_pattern(
         src["events"], _pattern_legs(), within_seconds=86400,
         mode="skip_to_next",
-    ).select("user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id")
+    ).select(*_PATTERN_COLS)
 
 
 def streaming_cep_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2144,36 +1856,7 @@ def streaming_cep_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFra
     lineage-marker state field makes a mode flip across a checkpoint
     resume a named error.  Oracle = the batch per-anchor row_number
     twin."""
-
-    from ksql_spark.operators.cep_nfa import match_pattern_stream
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_cepskipnext_")
-    src = _stage_events_sentinels(spark, sf_dir, work, ["view", "click", "purchase"])
-    src = src.withWatermark("ts", "30 minutes")
-    m = match_pattern_stream(
-        src, _pattern_legs(), within_seconds=86400, mode="skip_to_next"
-    ).filter(Fn.col("user_id") >= 0)
-    sink = ExactlyOnceParquetSink(
-        os.path.join(work, "engine", "cepskipnext"), lineage=False
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            m.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark).select(
-        "user_id", "v_first_id", "v_last_id", "v_count", "c_id", "p_id"
-    )
+    return _nfa_drain(spark, sf_dir, _pattern_legs(), "skip_to_next", _PATTERN_COLS)
 
 
 def streaming_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2186,70 +1869,54 @@ def streaming_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash (replay-stable), build side exploded across the 8 salt buckets,
     the WITHIN bound keeping both sides watermark-evictable.  Result is
     row-identical to the unsalted join; oracle = the batch SQL join."""
-    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
-    from ksql_spark.streaming.skew import salted_stream_stream_join
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_skewjoin_")
-    skew_key = Fn.when(Fn.col("user_id") % 10 < 7, Fn.lit(0)).otherwise(
-        Fn.col("user_id")
-    )
-    # subsample 1-in-3: a streaming symmetric hash join scans every stored
-    # same-key row per input row, so the hot key's work is QUADRATIC in its
-    # population — that is the cost salting spreads (it cannot shrink it).
-    # The subsample keeps the 70% skew ratio while keeping the bench row
-    # proportionate to the rest of the suite at sf0.1.  Staged with a
-    # pyarrow predicate instead of a Spark read+filter+rewrite job (r7) —
-    # identical rows under the source's own schema.
-    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    tbl = pq.read_table(src_path)
-    mask = (tbl.column("event_id").to_numpy() % 3) == 0
-    os.makedirs(os.path.join(work, "ev"), exist_ok=True)
-    pq.write_table(tbl.filter(pa.array(mask)), os.path.join(work, "ev", "part-0.parquet"))
+    from ksql_spark.streaming.skew import salted_stream_stream_join
 
-    schema = spark.read.parquet(os.path.join(work, "ev")).schema
-    ts_is_ntz = any(f.name == "ts" and str(f.dataType) == "TimestampNTZType()" for f in schema)
+    skew_key = Fn.when(Fn.col("user_id") % 10 < 7, Fn.lit(0)).otherwise(
+        Fn.col("user_id")
+    )
 
-    def leg(event_type: str, id_out: str, ts_out: str):
-        src = spark.readStream.schema(schema).parquet(os.path.join(work, "ev"))
-        if ts_is_ntz:
-            src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
-        return (
-            src.filter(Fn.col("event_type") == event_type)
-            .select(
-                skew_key.alias("k") if id_out == "l_id" else skew_key.alias("__rk0"),
-                Fn.col("event_id").alias(id_out),
-                Fn.col("ts").alias(ts_out),
+    def plan(work):
+        # subsample 1-in-3: a streaming symmetric hash join scans every stored
+        # same-key row per input row, so the hot key's work is QUADRATIC in its
+        # population — that is the cost salting spreads (it cannot shrink it).
+        # The subsample keeps the 70% skew ratio while keeping the bench row
+        # proportionate to the rest of the suite at sf0.1.  Staged with a
+        # pyarrow predicate instead of a Spark read+filter+rewrite job (r7) —
+        # identical rows under the source's own schema.
+        ev_dir = os.path.join(work, "ev")
+        tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+        mask = (tbl.column("event_id").to_numpy() % 3) == 0
+        os.makedirs(ev_dir, exist_ok=True)
+        pq.write_table(tbl.filter(pa.array(mask)), os.path.join(ev_dir, "part-0.parquet"))
+
+        schema = spark.read.parquet(ev_dir).schema
+        ts_is_ntz = any(f.name == "ts" and str(f.dataType) == "TimestampNTZType()" for f in schema)
+
+        def leg(event_type: str, key_out: str, id_out: str, ts_out: str):
+            src = spark.readStream.schema(schema).parquet(ev_dir)
+            if ts_is_ntz:
+                src = src.withColumn("ts", Fn.col("ts").cast("timestamp"))
+            return (
+                src.filter(Fn.col("event_type") == event_type)
+                .select(
+                    skew_key.alias(key_out),
+                    Fn.col("event_id").alias(id_out),
+                    Fn.col("ts").alias(ts_out),
+                )
+                .withWatermark(ts_out, "365 days")
             )
-            .withWatermark(ts_out, "365 days")
-        )
 
-    left = leg("click", "l_id", "l_ts")
-    right = leg("purchase", "r_id", "r_ts").withColumnRenamed("__rk0", "k")
-    joined = salted_stream_stream_join(
-        left, right, key="k", left_ts="l_ts", right_ts="r_ts",
-        within_seconds=900, salt_buckets=8, left_salt_cols=["l_id"],
-    ).select("k", "l_id", "r_id")
-    sink = ExactlyOnceParquetSink(os.path.join(work, "engine", "skewjoin"), lineage=False)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        with _no_data_batches_off(spark):
-            q = (
-                joined.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return sink.read_data(spark)
+        left = leg("click", "k", "l_id", "l_ts")
+        right = leg("purchase", "__rk0", "r_id", "r_ts").withColumnRenamed("__rk0", "k")
+        return salted_stream_stream_join(
+            left, right, key="k", left_ts="l_ts", right_ts="r_ts",
+            within_seconds=900, salt_buckets=8, left_salt_cols=["l_id"],
+        ).select("k", "l_id", "r_id")
+
+    return _drain(spark, plan, skip_no_data=True)
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2313,25 +1980,9 @@ def streaming_topk_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized state equals the batch recompute).  Before this, HAVING
     silently fell back to the unbounded native fold.  Oracle = batch top-k
     filtered by the same array comparison."""
-    from ksql_spark import TABLE, Catalog, Create, F, RawColumn, STREAM, Schema, Select, TopK
+    from ksql_spark import TABLE, Create, F, RawColumn, STREAM, Schema, Select, TopK
     from ksql_spark.expr import Conditional
-    from ksql_spark.streaming.engine import PersistentQueryManager
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_topkhav_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     agg = TopK(RawColumn(Fn.round(Fn.col("value"), 4)), 3).Alias("top_vals")
     csas = Create(TABLE, "user_topk_hav").AsSelect(
         Select(F("user_id"), agg)
@@ -2340,9 +1991,7 @@ def streaming_topk_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         .Having(Conditional(agg, ">=", [300.0]))
         .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_topk_hav")
+    state = _run_persistent(spark, sf_dir, csas, skip_no_data=True)
     return state.select("user_id", Fn.posexplode("top_vals").alias("rank", "top_val")).select(
         "user_id", Fn.col("rank").cast("bigint").alias("rank"), "top_val"
     )
@@ -2354,26 +2003,8 @@ def streaming_multi_agg_changelog(spark: SparkSession, sf_dir: str) -> DataFrame
     next to the O(k) TOPK, so the mixed query no longer falls back to the
     native fold whose collect state grows with group history.  Oracle = the
     batch recompute (group stats joined to the unnested top-k)."""
-    from ksql_spark import (
-        TABLE, Catalog, Count, Create, F, Max, RawColumn, STREAM, Schema, Select, Sum, TopK,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, Count, Create, F, Max, RawColumn, STREAM, Schema, Select, Sum, TopK
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_multi_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     rv = RawColumn(Fn.round(Fn.col("value"), 4))
     csas = Create(TABLE, "user_mix").AsSelect(
         Select(
@@ -2387,9 +2018,7 @@ def streaming_multi_agg_changelog(spark: SparkSession, sf_dir: str) -> DataFrame
         .GroupBy(F("user_id"))
         .EmitChanges()
     )
-    with _no_data_batches_off(spark):
-        mgr.create_as_select(csas, available_now=True, await_termination=True)
-    state = cat.read("QUERYABLE_user_mix")
+    state = _run_persistent(spark, sf_dir, csas, skip_no_data=True)
     return state.select(
         "user_id",
         "cnt",
@@ -2409,35 +2038,8 @@ def streaming_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each session is emitted exactly once when the watermark closes it.
     Oracle = the batch gap-session recompute restricted to watermark-closed
     sessions (session_end <= max(ts) - grace)."""
-    from ksql_spark import (
-        TABLE,
-        Catalog,
-        Count,
-        Create,
-        F,
-        STREAM,
-        Schema,
-        Select,
-        SessionWindow,
-        TimeUnit,
-    )
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import TABLE, Count, Create, F, STREAM, Schema, Select, SessionWindow, TimeUnit
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_sessfin_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events",
-        os.path.join(sf_dir, "events.parquet"),
-        ref=STREAM,
-        event_time_col="ts",
-        event_order_cols=["ts", "event_id"],
-        partitions=8,
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="30 minutes",
-        enable_metrics=False,
-    )
     csas = Create(TABLE, "session_finals").AsSelect(
         Select(F("user_id"), Count(F("event_id")).Alias("cnt"))
         .From(Schema("events", STREAM))
@@ -2445,9 +2047,7 @@ def streaming_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         .GroupBy(F("user_id"))
         .EmitFinal()
     )
-    mgr.create_as_select(csas, available_now=True, await_termination=True)
-    out = mgr.queries["session_finals"].sink.read_data(spark)
-    return out.select(
+    return _run_persistent(spark, sf_dir, csas, grace="30 minutes").select(
         Fn.unix_micros(Fn.col("window_start").cast("timestamp")).alias("session_start_us"),
         Fn.unix_micros(Fn.col("window_end").cast("timestamp")).alias("session_end_us"),
         "user_id",
@@ -2664,25 +2264,20 @@ def q_select_once_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SelectOnce — the pull-query client API (reference: SelectOnce,
     streams/specification.go:588-620): one-shot read of current data through
     the engine, returned as rows.  Oracle = the same filter in SQL."""
-    from ksql_spark import Catalog, F, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import F, STREAM, Schema, Select
 
-    work = _scratch_dir("ksql_driver_pull_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events", os.path.join(sf_dir, "events.parquet"), ref=STREAM,
-        event_time_col="ts", event_order_cols=["ts", "event_id"],
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), enable_metrics=False
-    )
     sb = (
         Select(F("event_id"), F("user_id"), F("event_type"))
         .From(Schema("events", STREAM))
         .Where(F("value").Greater(90))
     )
-    rows = mgr.select_once(sb)  # the client-facing list[Row] surface
-    return spark.createDataFrame(rows, "event_id bigint, user_id bigint, event_type string")
+    return _run_persistent(
+        spark, sf_dir,
+        # the client-facing list[Row] surface
+        lambda mgr: spark.createDataFrame(
+            mgr.select_once(sb), "event_id bigint, user_id bigint, event_type string"
+        ),
+    )
 
 
 def q_select_with_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2691,28 +2286,21 @@ def q_select_with_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion, yielding the committed changelog rows.  One availableNow
     batch -> the changelog carries each key's final upsert; oracle = the
     batch aggregate."""
-    from ksql_spark import Catalog, Count, F, STREAM, Schema, Select
-    from ksql_spark.streaming.engine import PersistentQueryManager
+    from ksql_spark import Count, F, STREAM, Schema, Select
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = _scratch_dir("ksql_driver_emit_")
-    cat = Catalog(spark, root=os.path.join(work, "catalog"))
-    cat.register_parquet(
-        "events", os.path.join(sf_dir, "events.parquet"), ref=STREAM,
-        event_time_col="ts", event_order_cols=["ts", "event_id"],
-    )
-    mgr = PersistentQueryManager(
-        spark, cat, workdir=os.path.join(work, "engine"), grace="365 days",
-        enable_metrics=False,
-    )
     sb = (
         Select(F("event_type"), Count(F("event_id")).Alias("cnt"))
         .From(Schema("events", STREAM))
         .GroupBy(F("event_type"))
         .EmitChanges()
     )
-    rows = [(r["event_type"], r["cnt"]) for r in mgr.select_with_emit(sb)]
-    return spark.createDataFrame(rows, "event_type string, cnt bigint")
+    return _run_persistent(
+        spark, sf_dir,
+        lambda mgr: spark.createDataFrame(
+            [(r["event_type"], r["cnt"]) for r in mgr.select_with_emit(sb)],
+            "event_type string, cnt bigint",
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2739,7 +2327,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # fix).  Entries beyond 50 all have a green CORRECTNESS_r05 row; the
     # full registry is re-verified locally every round with per-entry
     # source-version hashes (tools/check_correctness.py transcript in
-    # BENCH/CORRECTNESS_LOCAL_r06.md + BENCH/ENTRY_VERSIONS.json).
+    # BENCH/CORRECTNESS_LOCAL_r07.md + BENCH/ENTRY_VERSIONS.json).
     return {
         # -- r4-only driver rows, r5 code changes first ---------------------
         "streaming_topk_having": streaming_topk_having,

@@ -1,9 +1,10 @@
 """Extra benchmarks / diagnostics (guide §1.4) — NOT the driver contract.
 
-Per-entry wall time split into fn() vs count(), plus a StreamingQueryListener
-that records every micro-batch's durationMs breakdown (addBatch, getBatch,
-walCommit, queryPlanning, stateOperators counts) for every streaming query
-the entries start.  Used to attribute the streaming entries' seconds to
+Per-entry wall time split into fn() vs count(), plus the engine's
+EngineMetricsListener rows — every micro-batch's duration_ms breakdown
+(addBatch, getBatch, walCommit, queryPlanning) and state-operator rows,
+commit time and custom store metrics — for every streaming query the
+entries start.  Used to attribute the streaming entries' seconds to
 phases before optimizing (OPTIMIZATION_r07.md cites these numbers).
 
 Usage:
@@ -16,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -28,7 +30,7 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from bench import HEADLINE
     from ksql_spark.session import get_spark
-    from pyspark.sql.streaming import StreamingQueryListener
+    from ksql_spark.streaming.metrics import EngineMetricsListener
 
     names = sys.argv[1:] or HEADLINE
 
@@ -41,43 +43,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    progress_log: list[dict] = []
-
-    class ProgressTap(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            progress_log.append({"ev": "start", "name": event.name, "t": time.time()})
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            progress_log.append(
-                {
-                    "ev": "progress",
-                    "name": p.name,
-                    "batchId": p.batchId,
-                    "numInputRows": p.numInputRows,
-                    "durationMs": dict(p.durationMs),
-                    "stateOperators": [
-                        {
-                            "operatorName": s.operatorName,
-                            "numRowsTotal": s.numRowsTotal,
-                            "numRowsUpdated": s.numRowsUpdated,
-                            "commitTimeMs": s.commitTimeMs,
-                            "numShufflePartitions": s.numShufflePartitions,
-                            "customMetrics": dict(s.customMetrics),
-                        }
-                        for s in p.stateOperators
-                    ],
-                    "t": time.time(),
-                }
-            )
-
-        def onQueryTerminated(self, event):
-            progress_log.append({"ev": "end", "t": time.time()})
-
-        def onQueryIdle(self, event):
-            pass
-
-    spark.streams.addListener(ProgressTap())
+    metrics_dir = tempfile.TemporaryDirectory(prefix="ksql_bench_extra_")
+    listener = EngineMetricsListener(metrics_dir.name)
+    spark.streams.addListener(listener)
 
     qs = entry_mod.queries()
     spark.range(1000).count()
@@ -85,7 +53,7 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in names:
         fn = qs[name]
-        mark = len(progress_log)
+        mark = len(listener.rows())
         t0 = time.time()
         df = fn(spark, SF_DIR)
         t1 = time.time()
@@ -97,7 +65,7 @@ def main() -> None:
             "fn": round(t1 - t0, 3),
             "count": round(t2 - t1, 3),
             "rows": n,
-            "progress": progress_log[mark:],
+            "progress": listener.rows()[mark:],
         }
         sys.stderr.write(
             f"{name}: total={out[name]['total']} fn={out[name]['fn']} "

@@ -460,13 +460,14 @@ def _leg_runs(df: DataFrame, pred: Column, m: int, n: int | None,
               within: Column, key_col: str, ts_col: str, id_col: str, i: int) -> DataFrame:
     """Leg i's run frame: (key, first_ts, first_id, last_ts, last_id, count).
 
+    NULL keys are dropped (a NULL key never matches, as in an equi-join).
     A (1,1) leg is just its events (run == event, no self-join); a
     quantified leg is the rn-banded self-join over its own filtered
     subsequence.  ``last_ts <= first_ts + within`` bounds the band at
     construction (any run inside some anchor's horizon satisfies it), so a
     Kleene leg never builds an unbounded product.
     """
-    base = df.filter(pred).select(
+    base = df.filter(pred & F.col(key_col).isNotNull()).select(
         F.col(key_col).alias(f"__k{i}"),
         F.col(ts_col).alias(f"__f{i}_ts"),
         F.col(id_col).alias(f"__f{i}_id"),
@@ -731,17 +732,8 @@ def _match_pattern_skip_batch(
     recursive-CTE greedy over the all-matches set (driver entry
     cep_pattern_skip).
     """
-    preds = [pred for _, pred, _, _ in legs]
     n_legs = len(legs)
-    sel = [
-        F.col(key_col).alias("__k"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__ts"),
-        F.col(id_col).alias("__id"),
-    ] + [p.alias(f"__p{i}") for i, p in enumerate(preds)]
-    keep = F.coalesce(F.col("__p0"), F.lit(False))
-    for i in range(1, n_legs):
-        keep = keep | F.coalesce(F.col(f"__p{i}"), F.lit(False))
-    proj = df.select(*sel).filter(keep)
+    proj = _pattern_projection(df, legs, key_col, ts_col, id_col)
 
     key_type = df.select(F.col(key_col)).schema[0].dataType
     id_type = df.select(F.col(id_col)).schema[0].dataType
@@ -781,6 +773,27 @@ def _match_pattern_skip_batch(
         .mapInPandas(skip_part, StructType(out_fields))
         .withColumnRenamed("__k", key_col)
     )
+
+
+def _pattern_projection(df: DataFrame, legs, key_col: str, ts_col: str, id_col: str,
+                        event_time: bool = False) -> DataFrame:
+    """The narrow per-event projection both kernel lowerings shuffle: key
+    ``__k``, ``__ts`` (epoch micros), ``__id`` and one ``__p<i>`` mask per
+    leg, keeping only events some leg's predicate accepts.  NULL keys are
+    dropped here — a NULL key never matches, as in a SQL equi-join (the
+    banded-join lowering drops them the same way).  ``event_time`` keeps
+    the watermarked ts column as ``__wmts`` for the streaming timeout."""
+    sel = [F.col(key_col).alias("__k")]
+    if event_time:
+        sel.append(F.col(ts_col).alias("__wmts"))
+    sel += [
+        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__ts"),
+        F.col(id_col).alias("__id"),
+    ] + [pred.alias(f"__p{i}") for i, (_, pred, _, _) in enumerate(legs)]
+    keep = F.coalesce(F.col("__p0"), F.lit(False))
+    for i in range(1, len(legs)):
+        keep = keep | F.coalesce(F.col(f"__p{i}"), F.lit(False))
+    return df.select(*sel).filter(F.col("__k").isNotNull() & keep)
 
 
 def _out_schema(legs, key_type, id_type) -> tuple[list[StructField], list[str]]:
@@ -1036,17 +1049,7 @@ def match_pattern_stream(
     if not df.isStreaming:
         raise AnalysisError("match_pattern_stream requires a streaming DataFrame")
 
-    preds = [pred for _, pred, _, _ in legs]
-    sel = [
-        F.col(key_col).alias("__k"),
-        F.col(ts_col).alias("__wmts"),
-        F.unix_micros(F.col(ts_col)).alias("__ts"),
-        F.col(id_col).alias("__id"),
-    ] + [p.alias(f"__p{i}") for i, p in enumerate(preds)]
-    keep = F.coalesce(F.col("__p0"), F.lit(False))
-    for i in range(1, len(preds)):
-        keep = keep | F.coalesce(F.col(f"__p{i}"), F.lit(False))
-    proj = df.select(*sel).filter(keep)
+    proj = _pattern_projection(df, legs, key_col, ts_col, id_col, event_time=True)
 
     key_type = df.select(F.col(key_col)).schema[0].dataType
     id_type = df.select(F.col(id_col)).schema[0].dataType

@@ -323,6 +323,16 @@ class PersistentQueryManager:
         self._start(pq, available_now, processing_time, await_termination, None)
         return pq
 
+    def close(self) -> None:
+        """Stop every running query and deregister the metrics listener, so
+        a closed manager leaves nothing behind on the shared session."""
+        for name in self.queries:
+            self.stop(name)
+        if self.listener is not None:
+            self.spark.streams.removeListener(self.listener)
+            self.listener.close()
+            self.listener = None
+
     def drop(self, name: str) -> None:
         """DROP the relation and stop its query (drop_builder semantics)."""
         if name in self.queries:

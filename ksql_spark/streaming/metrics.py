@@ -5,9 +5,12 @@ query.  Two complementary mechanisms:
 
 1. ``EngineMetricsListener`` — a ``StreamingQueryListener`` that appends one
    JSON line per micro-batch progress event (query name, batch id, input
-   rows, processing rate, state-store metrics) to ``<dir>/metrics.jsonl``.
-   This is the engine-level metrics table; in production the same listener
-   writes to an Iceberg ``_metrics`` table instead of local JSONL.
+   rows, processing rate, phase durations, per-state-operator rows, commit
+   time, shuffle partitions and custom store metrics) to
+   ``<dir>/metrics.jsonl``.  This is the engine-level metrics table; in
+   production the same listener writes to an Iceberg ``_metrics`` table
+   instead of local JSONL.  ``close()`` ends its writes; the owning
+   ``PersistentQueryManager.close()`` also deregisters it.
 
 2. Per-partition row counts per epoch are recorded by the exactly-once sink
    in its commit markers (see sink.py) — lineage survives restarts because
@@ -29,6 +32,7 @@ class EngineMetricsListener(StreamingQueryListener):
         os.makedirs(out_dir, exist_ok=True)
         self.path = os.path.join(out_dir, "metrics.jsonl")
         self._lock = threading.Lock()
+        self._closed = False
 
     def onQueryStarted(self, event) -> None:
         self._write({"event": "started", "id": str(event.id), "name": event.name})
@@ -49,6 +53,9 @@ class EngineMetricsListener(StreamingQueryListener):
                     "rows_total": s.numRowsTotal,
                     "rows_updated": s.numRowsUpdated,
                     "memory_bytes": s.memoryUsedBytes,
+                    "commit_ms": s.commitTimeMs,
+                    "shuffle_partitions": s.numShufflePartitions,
+                    "custom_metrics": dict(s.customMetrics),
                 }
                 for s in (p.stateOperators or [])
             ],
@@ -61,8 +68,23 @@ class EngineMetricsListener(StreamingQueryListener):
     def onQueryIdle(self, event) -> None:
         pass
 
+    def rows(self) -> list[dict]:
+        """Every row written so far, in order."""
+        with self._lock:
+            if not os.path.exists(self.path):
+                return []
+            with open(self.path) as fh:
+                return [json.loads(line) for line in fh]
+
+    def close(self) -> None:
+        """Write nothing more (events already queued on the bus included)."""
+        with self._lock:
+            self._closed = True
+
     def _write(self, row: dict) -> None:
         with self._lock:
+            if self._closed:
+                return
             with open(self.path, "a") as fh:
                 fh.write(json.dumps(row) + "\n")
 

@@ -1224,3 +1224,74 @@ def test_reserved_leg_name_prefix_rejected(spark):
              ("b", F.col("event_type") == "b", 1, 1)],
             within_seconds=60,
         )
+
+
+# ---------------------------------------------------------------------------
+# NULL keys never match (batch and stream agree)
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def null_key_events(spark):
+    """Keys 1, 2 and NULL with the same A/B history each: ten A -> B pairs."""
+    rows = []
+    for k, key in enumerate([1, 2, None]):
+        for j in range(10):
+            base = 1000 * k + 60 * j
+            rows += [(1000 * k + 2 * j, key, "A", base), (1000 * k + 2 * j + 1, key, "B", base + 5)]
+    return spark.createDataFrame(
+        rows, "event_id bigint, user_id bigint, event_type string, sec bigint"
+    ).select(
+        "event_id",
+        "user_id",
+        "event_type",
+        (Fn.lit("2024-01-01 00:00:00").cast("timestamp") + Fn.make_interval(secs=Fn.col("sec"))).alias("ts"),
+    )
+
+
+def _ab_legs():
+    return [("a", Fn.col("event_type") == "A", 1, 1), ("b", Fn.col("event_type") == "B", 1, 1)]
+
+
+@pytest.mark.parametrize("mode", ["all", "first", "skip_past_last", "skip_to_next"])
+def test_null_keys_never_match_batch_and_stream(spark, null_key_events, tmp_path, mode):
+    """A NULL key never matches, as in a SQL equi-join: the batch lowering
+    and the streaming NFA both drop NULL-key events in every match mode."""
+    from collections import Counter
+
+    from ksql_spark.operators.cep_nfa import match_pattern, match_pattern_stream
+    from ksql_spark.streaming.sink import ExactlyOnceParquetSink
+
+    batch = Counter(
+        r["user_id"]
+        for r in match_pattern(null_key_events, _ab_legs(), within_seconds=30, mode=mode).collect()
+    )
+    path = str(tmp_path / "ev")
+    _write_stream_fixture(spark, null_key_events, path, parts=2)
+    src = spark.readStream.schema(null_key_events.schema).parquet(path).withWatermark("ts", "5 seconds")
+    out = match_pattern_stream(src, _ab_legs(), within_seconds=30, mode=mode)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"), lineage=False)
+    (
+        out.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    stream = Counter(r["user_id"] for r in sink.read_data(spark).collect() if r["user_id"] != -1)
+    per_key = 1 if mode == "first" else 10
+    assert batch == stream == Counter({1: per_key, 2: per_key})
+
+
+def test_null_keys_never_match_one_leg_pattern(spark, null_key_events):
+    """A one-leg pattern does no join, so its NULL-key drop is explicit."""
+    from collections import Counter
+
+    from ksql_spark.operators.cep_nfa import match_pattern
+
+    got = Counter(
+        r["user_id"]
+        for r in match_pattern(null_key_events, _ab_legs()[:1], within_seconds=30).collect()
+    )
+    assert got == Counter({1: 10, 2: 10})

@@ -46,7 +46,9 @@ def engine(spark, workdir, transcripts):
         event_order_cols=["ts", "turn_idx"],
         metadata={"max_files_per_trigger": 3},
     )
-    return PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng", grace="10 minutes")
+    mgr = PersistentQueryManager(spark, cat, workdir=f"{workdir}/eng", grace="10 minutes")
+    yield mgr
+    mgr.close()
 
 
 def batch_windowed(tdf):
@@ -173,6 +175,38 @@ def test_lineage_and_metrics_recorded(spark, engine, transcripts):
     assert all("partitions" in e for e in lineage)
     total = sum(e["rows"] or 0 for e in lineage)
     assert total >= engine.catalog.read("QUERYABLE_lin").count()
+
+    # progress events reach the listener asynchronously: wait until they
+    # account for every input row
+    listener = engine.listener
+    n_input = engine.catalog.read("transcripts").count()
+
+    def progress():
+        return [r for r in listener.rows() if r["event"] == "progress" and r["name"] == "lin"]
+
+    deadline = time.time() + 30
+    while sum(r["num_input_rows"] for r in progress()) < n_input:
+        assert time.time() < deadline, "progress rows for 'lin' miss input rows"
+        time.sleep(0.2)
+    assert all("commit_ms" in s for r in progress() for s in r["state_operators"])
+
+    # close() deregisters the listener, which writes nothing more
+    listeners = spark._jsparkSession.streams().listListeners
+    n_listeners = len(listeners())
+    engine.close()
+    assert engine.listener is None and len(listeners()) == n_listeners - 1
+    written = listener.rows()
+    engine.create_as_select(
+        Create(TABLE, "lin2").AsSelect(
+            Select(F("conv_id"), Count(F("turn_idx")).Alias("n"))
+            .From(Schema("transcripts", STREAM))
+            .GroupBy(F("conv_id"))
+            .EmitChanges()
+        ),
+        available_now=True,
+    )
+    time.sleep(1.0)
+    assert listener.rows() == written
 
 
 def test_filter_project_stream_append(spark, engine, transcripts):

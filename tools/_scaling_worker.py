@@ -22,9 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     cores, data, out = int(sys.argv[1]), sys.argv[2], sys.argv[3]
-    # optional 4th arg: JSON {"shuffle_partitions": int, "extra_conf": {...}}
-    # for the engine-settings sweep at high core counts (VERDICT r4 #5)
-    tune = json.loads(sys.argv[4]) if len(sys.argv) > 4 else {}
     os.environ.setdefault("KSQL_SPARK_DRIVER_MEM", "48g")
 
     from ksql_spark import (
@@ -53,14 +50,13 @@ def main() -> None:
     spark = get_spark(
         app_name=f"scaling_{cores}",
         master=f"local[{cores}]",
-        shuffle_partitions=int(tune.get("shuffle_partitions", cores * 4)),
+        shuffle_partitions=cores * 4,
         extra_conf={
             "spark.local.dir": os.path.join(fast, f"local_{cores}"),
             # the generator writes ~22MB files; default 128MB bin-packing
             # would cap scan parallelism at ~11 tasks regardless of cores
             "spark.sql.files.maxPartitionBytes": "16m",
             "spark.sql.files.openCostInBytes": "0",
-            **tune.get("extra_conf", {}),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -140,7 +136,6 @@ def main() -> None:
                 "seconds": round(dt, 3),
                 "turns_per_sec": round(rows / dt, 1),
                 "state_rows": state_rows,
-                "tune": tune,
             },
             fh,
         )
